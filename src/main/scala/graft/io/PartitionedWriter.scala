@@ -1,6 +1,9 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.concurrent.Await
+import scala.concurrent.duration._
+
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** ds-partitioned parquet sink — SURVEY.md §2.A (A6-A11), the
@@ -55,6 +58,28 @@ object PartitionedWriter {
       compact: Boolean = true): Unit =
     writePartitionedBy(df, path, Seq(partitionCol), overwritePartitions, compact)
 
+  /** How long [[writePartitionedCounted]] waits for its row count. */
+  val rowCountTimeout: FiniteDuration = 60.seconds
+
+  /** [[writePartitioned]] (dynamic overwrite, compacted) that returns
+    * the number of rows written. The count is an `Observation` on the
+    * written frame, so it rides the write's own job: nothing re-lists or
+    * re-reads `path`. It arrives on the listener bus just after the
+    * write returns; if it has not arrived within [[rowCountTimeout]],
+    * this throws instead of guessing.
+    */
+  def writePartitionedCounted(df: DataFrame, path: String): Long = {
+    val rows = Observation()
+    write(df, path, Seq("ds"), overwritePartitions = true, compact = true, Some(rows))
+    observedRows(rows, rowCountTimeout)
+  }
+
+  /** The `rows` metric of an observation; throws a `TimeoutException`
+    * once `timeout` passes without it.
+    */
+  def observedRows(rows: Observation, timeout: FiniteDuration): Long =
+    Await.result(rows.future, timeout).getAs[Long]("rows")
+
   /** Multi-column variant: the partition-key granularity must match
     * the unit a producer replays — dynamic overwrite replaces every
     * partition present in `df`, so a batch that carries only PART of a
@@ -67,7 +92,11 @@ object PartitionedWriter {
       path: String,
       partitionCols: Seq[String],
       overwritePartitions: Boolean = true,
-      compact: Boolean = true): Unit = {
+      compact: Boolean = true): Unit =
+    write(df, path, partitionCols, overwritePartitions, compact, None)
+
+  private def write(df: DataFrame, path: String, partitionCols: Seq[String],
+      overwritePartitions: Boolean, compact: Boolean, rows: Option[Observation]): Unit = {
     // Repartition BY the partition columns: each task owns a disjoint
     // set of partition values, so (a) writers parallelize across tasks
     // instead of one task fanning out every directory, and (b) each
@@ -85,8 +114,14 @@ object PartitionedWriter {
       df.repartition(n, partitionCols.map(col): _*)
     } else df
     val mode = if (overwritePartitions) SaveMode.Overwrite else SaveMode.Append
-    out.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    out.write.mode(mode).partitionBy(partitionCols: _*).parquet(path)
+    // Per-write option, not the session conf: setting the session value
+    // would turn every later plain overwrite in the session dynamic.
+    // The count is observed above the repartition, in the write's own
+    // stage: below it, AQE drops the observing stage from the final
+    // plan once that stage comes back empty, and no count arrives.
+    rows.fold(out)(o => out.observe(o, count(lit(1)).as("rows")))
+      .write.mode(mode).option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*).parquet(path)
     // Dynamic partition overwrite commits per-partition directory and
     // does NOT leave the root _SUCCESS marker a static write does. The
     // staging gates ("is this dataset complete?") key on that marker —

@@ -1,12 +1,12 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Source connectors — SURVEY.md §2.A (A1-A5).
   *
   * Schema rule (SURVEY §1.2): every schemaless edge (CSV, JDBC-free
-  * demo, driver rows) takes an explicit StructType — the reference
+  * demo, API payloads) takes an explicit StructType — the reference
   * relies on pandas/JDBC inference, which is a correctness hazard.
   */
 object Sources {
@@ -63,13 +63,6 @@ object Sources {
       .schema(schema.add("_corrupt", org.apache.spark.sql.types.StringType))
       .csv(path)
 
-  /** A4 — driver-local rows to a distributed frame, the reference's
-    * pandas->Spark hop (`Ingestion Data (XML).py:132`). Small data only:
-    * everything ships from the driver.
-    */
-  def fromRows(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toList, 1), schema)
-
   /** A2 — the HTTP XML-query fetch seam (`Ingestion Data
     * (XML).py:91-127`). The transport is injectable so the transform
     * pipeline is testable without a network and the fetch can later
@@ -79,13 +72,21 @@ object Sources {
     */
   trait Fetcher { def fetch(requestBody: String): String }
 
-  /** Parse a CSV payload (as returned by the XML-query API) into rows
-    * using the given explicit schema, via Spark's CSV reader over an
-    * in-memory dataset — same parser as file CSV, no pandas staging.
+  /** Parse CSV payloads (as returned by the XML-query API) into rows
+    * using the given explicit schema, in ONE pass of Spark's CSV reader
+    * over an in-memory dataset — same parser as file CSV, no pandas
+    * staging. Each payload carries its own header; it is dropped here on
+    * the driver the way the reader's `header` option drops it (every
+    * line equal to the payload's first non-blank line). Reading with
+    * that option instead runs one header probe per payload (a driver
+    * action), so a day's Spark actions would grow with its payloads.
     */
-  def csvPayload(spark: SparkSession, payload: String, schema: StructType): DataFrame = {
+  def csvPayloads(spark: SparkSession, payloads: Seq[String], schema: StructType): DataFrame = {
     import spark.implicits._
-    spark.read.option("header", "true").schema(schema)
-      .csv(spark.createDataset(payload.split("\n").toList))
+    val lines = payloads.flatMap { p =>
+      val ls = p.split("\n").toSeq
+      ls.find(_.trim.nonEmpty).fold(ls)(header => ls.filter(_ != header))
+    }
+    spark.read.schema(schema).csv(spark.createDataset(lines))
   }
 }

@@ -64,10 +64,11 @@ object Enrich {
       col("throughput_bps"), col("tanggal_bulan_tahun"), col("jam"), col("menit"), col("ds"))): _*)
   }
 
+  /** Enrich + pivot `day` into `outPath`; returns the rows written,
+    * observed on the write (the output is not re-read).
+    */
   def run(remotes: DataFrame, hosts: DataFrame, items: DataFrame, fact: DataFrame,
-      day: String, outPath: String): Long = {
-    val out = pivotAndDerive(enrich(remotes, hosts, items, fact, day), day)
-    PartitionedWriter.writePartitioned(out, outPath)
-    out.sparkSession.read.parquet(outPath).filter(col("ds") === day).count()
-  }
+      day: String, outPath: String): Long =
+    PartitionedWriter.writePartitionedCounted(
+      pivotAndDerive(enrich(remotes, hosts, items, fact, day), day), outPath)
 }

@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * production `Sources.jdbcPushdown` with the subquery baked; in tests
   * a filtered fixture frame. Differences from the reference, by design:
   *  - no `count()` actions mid-loop (the reference re-reads the JDBC
-  *    source three times per slice — SURVEY §3.1); emptiness is decided
-  *    by the write metrics of a single materialization;
+  *    source three times per slice — SURVEY §3.1); an empty window
+  *    simply contributes no rows to the one write;
   *  - day-rollover idempotence is dynamic partition overwrite, not
   *    TRUNCATE+append (A8);
   *  - all hourly slices for a day union into ONE write (the reference
@@ -33,7 +33,13 @@ object MySqlIngest {
       .withColumn("value", Scalars.asCounter(col("value")))
       .withColumn("ds", Scalars.dsOf((col("clock") + 25200L).cast("timestamp")))
 
-  /** Ingest all hourly windows in [startClock, endClock). */
+  /** Ingest all hourly windows in [startClock, endClock). Returns the
+    * row count of the WHOLE dataset at `outPath` after the write, every
+    * ds partition included — not the rows this call landed. That total
+    * is what an incremental run is checked against (earlier days plus
+    * today), and the write alone does not know it, so `run` re-reads
+    * the dataset once after its single write.
+    */
   def run(spark: SparkSession,
       source: (Long, Long) => DataFrame,
       startClock: Long, endClock: Long,

@@ -268,12 +268,13 @@ object Streams {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val stamped = batch
-            .withColumn("ds", Scalars.dsOf(col("window_start")))
-            .withColumn("win", date_format(col("window_start"), "HHmm"))
-          PartitionedWriter.writePartitionedBy(stamped, path, Seq("ds", "win"), compact = false)
-        }
+        // No `isEmpty` guard: it would run the stateful plan (and its
+        // state-store commit) once more just to probe. A batch that
+        // closes no window writes no file and no partition anyway.
+        val stamped = batch
+          .withColumn("ds", Scalars.dsOf(col("window_start")))
+          .withColumn("win", date_format(col("window_start"), "HHmm"))
+        PartitionedWriter.writePartitionedBy(stamped, path, Seq("ds", "win"), compact = false)
       }
 
   /** Streaming data-contract router: every micro-batch splits into a

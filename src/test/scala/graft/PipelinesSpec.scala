@@ -25,6 +25,89 @@ class PipelinesSpec extends SparkSpec {
     assert(row.getAs[String]("ds") == "20240101")
   }
 
+  /** Spark jobs and SQL executions started from this thread while
+    * `body` runs. An action over an in-memory dataset (such as the CSV
+    * reader's header probe) runs on the driver without a job, so both
+    * are counted. The listener shares the bus queue the write's row
+    * count arrives on, so every start has reached it once a counted
+    * write returns.
+    */
+  private def actionsOf[T](body: => T): (T, (Int, Int)) = {
+    val group = s"actions-${java.util.UUID.randomUUID()}"
+    val jobs, executions = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+            if s.jobGroupId.contains(group) => executions.incrementAndGet()
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.setJobGroup(group, "actionsOf")
+    try (body, (jobs.get(), executions.get()))
+    finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("XmlIngest: one CSV pass — 288 payloads start as many actions as 2, headers never land") {
+    val header = "aplikasi,titik,transactions,delay,throughput,waktu,appId_String"
+    // 5-min slices of one day, each with its own header line; every
+    // other payload repeats its header mid-body, as the reader's
+    // `header` option would also drop
+    def payload(i: Int): String = {
+      val t = java.time.LocalDateTime.of(2024, 1, 1, 0, 0).plusMinutes(5L * i)
+        .format(java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss"))
+      val rows = Seq(s"app$i,site$i,$i.0,1.0,2.0,$t,A1", s"app$i,site$i,1.0,1.0,2.0,$t,ZZ")
+      (header +: (if (i % 2 == 0) rows :+ header else rows)).mkString("\n")
+    }
+    // the allowlist would admit a header row that reached the data
+    val allow = Seq("A1", "appId_String").toDF("app_string")
+    def ingest(n: Int) = {
+      val fetcher = new Sources.Fetcher { def fetch(req: String): String = payload(req.toInt) }
+      val out = tmpDir(s"xml_ingest_$n")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+      val (landed, actions) = actionsOf(
+        XmlIngest.run(spark, fetcher, (0 until n).map(_.toString), allow, "20240101", out))
+      (landed, actions, spark.read.parquet(out))
+    }
+    val (n2, actions2, _) = ingest(2)
+    val (n288, actions288, out288) = ingest(288)
+    assert(n2 == 2 && n288 == 288) // one allowlisted row per payload
+    assert(out288.count() == 288)
+    assert(out288.filter($"aplikasi" === "aplikasi" || $"transactions".isNull).count() == 0)
+    assert(out288.agg(sum($"transactions")).head().getDouble(0) == (0 until 288).sum.toDouble)
+    val parsed = Sources.csvPayloads(spark, (0 until 288).map(payload), XmlIngest.responseSchema)
+    assert(parsed.count() == 2 * 288 && parsed.filter($"aplikasi" === "aplikasi").count() == 0)
+    assert(actions288 == actions2,
+      s"(jobs, SQL executions): $actions288 over 288 payloads, $actions2 over 2")
+  }
+
+  test("XmlIngest: an empty request list, or no allowlisted row, lands nothing and returns 0") {
+    val none = new Sources.Fetcher { def fetch(req: String): String = fail("no fetch expected") }
+    val out = tmpDir("xml_ingest_empty")
+    assert(XmlIngest.run(spark, none, Nil, Seq("A1").toDF("app_string"), "20240101", out) == 0L)
+    // the write's row count still arrives when the write lands no row
+    val other = new Sources.Fetcher {
+      def fetch(req: String): String =
+        "aplikasi,titik,transactions,delay,throughput,waktu,appId_String\n" +
+          "app,site,1.0,1.0,2.0,2024-01-01 00:00:00,ZZ"
+    }
+    assert(XmlIngest.run(spark, other, Seq("r0"), Seq("A1").toDF("app_string"), "20240101", out) == 0L)
+  }
+
+  test("writePartitionedCounted: a row count that never arrives throws within its bound") {
+    import scala.concurrent.duration._
+    val t0 = System.nanoTime()
+    intercept[java.util.concurrent.TimeoutException](
+      PartitionedWriter.observedRows(org.apache.spark.sql.Observation(), 200.millis))
+    assert((System.nanoTime() - t0) / 1e9 < 10.0)
+  }
+
   test("MySqlIngest: hourly slices, decimal cast, ds derivation, idempotent rerun") {
     val fixture = Seq(
       (1L, 1704100000L, BigDecimal("18446744073709551615")), // uint64 max survives
@@ -80,6 +163,7 @@ class PipelinesSpec extends SparkSpec {
     val out = tmpDir("enrich")
     val n = Enrich.run(remotes, hosts, items, fact, "20240101", out)
     assert(n == 1) // in+out pivot onto one row
+    assert(n == spark.read.parquet(out).filter($"ds" === "20240101").count())
     val row = spark.read.parquet(out).head()
     assert(row.getAs[String]("description") == "WAN Link")
     assert(row.getAs[String]("interface") == "eth0")
@@ -100,6 +184,20 @@ class PipelinesSpec extends SparkSpec {
     val got = spark.read.parquet(out).select("id", "ds").as[(Int, String)].collect().toSet
     assert(got == Set((1, "20240101"), (2, "20240101"), (99, "20240102")))
     assert(PartitionedWriter.maxPartition(spark, out).contains("20240102"))
+  }
+
+  test("PartitionedWriter: dynamic overwrite is per write; the session conf stays as it was") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.get(key)
+    val out = tmpDir("writer_conf")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    PartitionedWriter.writePartitioned(
+      Seq((1, "20240101"), (2, "20240102")).toDF("id", "ds"), out, compact = false)
+    assert(spark.conf.get(key) == before)
+    // a later plain overwrite in the same session still truncates
+    Seq((9, "20240102")).toDF("id", "ds").write.mode("overwrite").partitionBy("ds").parquet(out)
+    val got = spark.read.parquet(out).select("id", "ds").as[(Int, String)].collect().toSet
+    assert(got == Set((9, "20240102")))
   }
 
   test("upsertByKey: replaces matched keys, keeps the rest, appends new, spares other partitions") {

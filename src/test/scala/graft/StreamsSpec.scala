@@ -4,6 +4,7 @@ import graft.streaming.Streams
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 
 /** Streaming twins driven by MemoryStream: the same plans as the
   * batch-checked QTimeseries queries, under OutputMode + watermark.
@@ -193,6 +194,43 @@ class StreamsSpec extends SparkSpec {
       assert(byDs.keySet == Set("20240101")) // all five evs are 2024-01-01
       // the closed 5-minute windows: 00:00 (2 rows incl. replayed dup), 00:05, 01:00
       assert(landed.select($"n").as[Long].collect().sum == 5L)
+    } finally q.stop()
+  }
+
+  test("partitionedSink: a batch that closes no window writes no file and no partition") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Ev]
+    val out = tmpDir("stream_quiet_out")
+    val ckpt = tmpDir("stream_quiet_ckpt")
+    Seq(out, ckpt).foreach(p => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
+    def files =
+      if (!new java.io.File(out).exists()) Set.empty[String]
+      else org.apache.commons.io.FileUtils.listFiles(new java.io.File(out), null, true).asScala
+        .map(_.getPath).filter(_.contains("part-")).toSet
+    def partitions = Option(new java.io.File(out).listFiles()).toSeq.flatten
+      .filter(_.getName.startsWith("ds="))
+      .flatMap(d => d.listFiles().filter(_.getName.startsWith("win=")).map(w => s"${d.getName}/${w.getName}"))
+      .toSet
+    val q = Streams.partitionedSink(Streams.tumblingAgg(mem.toDF()), out, ckpt,
+      org.apache.spark.sql.streaming.Trigger.ProcessingTime(0L)).start()
+    try {
+      def batch(e: Ev*): Unit = {
+        val before = Option(q.lastProgress).map(_.batchId).getOrElse(-1L)
+        mem.addData(e: _*)
+        q.processAllAvailable()
+        assert(q.lastProgress.batchId > before, "no micro-batch ran")
+      }
+      // one open window, watermark short of its end: nothing closes
+      batch(Ev(1, Timestamp.valueOf("2024-01-01 00:01:00"), 1, "click", 1.0),
+        Ev(2, Timestamp.valueOf("2024-01-01 00:02:00"), 1, "click", 2.0))
+      assert(files.isEmpty && partitions.isEmpty, s"quiet batch wrote $files")
+      // the watermark passes 00:05: the 00:00 window lands
+      batch(Ev(3, Timestamp.valueOf("2024-01-01 01:00:00"), 2, "view", 4.0))
+      val (landedFiles, landedParts) = (files, partitions)
+      assert(landedParts == Set("ds=20240101/win=0000") && landedFiles.nonEmpty)
+      // the watermark moves again but closes no window
+      batch(Ev(4, Timestamp.valueOf("2024-01-01 01:01:00"), 2, "view", 1.0))
+      assert(files == landedFiles && partitions == landedParts)
     } finally q.stop()
   }
 
