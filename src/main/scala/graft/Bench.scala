@@ -26,10 +26,13 @@ object Bench {
     def loadAvg(): Double = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
     val loadStart = loadAvg()
-    def timeOne(name: String): Double = {
+    // Seconds the query took, or the class of the exception it failed
+    // with: a failure's time-to-failure is not a query time.
+    def timeOne(name: String): Either[String, Double] = {
       val t0 = System.nanoTime()
-      try { SparkEntry.queries(name)(spark, sfDir).count() }
-      catch { case _: Throwable => -1L }
+      val outcome =
+        try { SparkEntry.queries(name)(spark, sfDir).count(); None }
+        catch { case e: Throwable => Some(e.getClass.getName) }
       val dt = (System.nanoTime() - t0) / 1e9
       // measured in isolation: drop any intra-query caches so earlier
       // queries' lingering blocks can't squeeze later queries' memory.
@@ -40,7 +43,7 @@ object Bench {
       // Force the GC in the UNTIMED cleanup window.
       spark.catalog.clearCache()
       System.gc()
-      dt
+      outcome.toLeft(dt)
     }
     val first = SparkEntry.queries.keys.toSeq.sorted.map(n => n -> timeOne(n))
     // Contention guard (round-3 artifact was ~2.3x host noise): any
@@ -76,25 +79,32 @@ object Bench {
     }.getOrElse(Map.empty)
     if (refTimes.isEmpty)
       System.err.println("[bench] retry baseline bench/bench_full_r07.json missing/unreadable — mid-range retry rule inert")
-    val retried = first.collect { case (n, t) if t > 8.0 ||
+    val retried = first.collect { case (n, Right(t)) if t > 8.0 ||
       refTimes.get(n).exists(r =>
         (t > 0.5 && t > 3 * r) || (r > 0.5 && t < r / 3)) => n }
     val redo = retried.map(n => n -> Seq(timeOne(n), timeOne(n))).toMap
-    val samples = first.map { case (n, t) => n -> (t +: redo.getOrElse(n, Seq.empty)) }
+    val outcomes = first.map { case (n, t) => n -> (t +: redo.getOrElse(n, Seq.empty)) }
+    // A query that failed on any sample is reported failed, with the
+    // exception class of its first failure, and carries no time.
+    val failed = outcomes.flatMap { case (n, os) => os.collectFirst { case Left(c) => n -> c } }
+    val samples = outcomes.collect { case (n, os) if !failed.exists(_._1 == n) =>
+      n -> os.collect { case Right(t) => t } }
     val results = samples.map { case (n, ss) => n -> ss.sorted.apply(ss.length / 2) }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    val retriedJson = retried.map { n =>
-      "\"" + n + "\":" + (samples.toMap.apply(n)).mkString("[", ",", "]")
+    val retriedJson = samples.filter(s => retried.contains(s._1)).map { case (n, ss) =>
+      "\"" + n + "\":" + ss.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
+    val failedJson = failed.map { case (n, c) => "\"" + n + "\":\"" + c + "\"" }
+      .mkString("{", ",", "}")
     // one sample reused by both records of this run — the disk artifact
     // and the stdout line must agree (ADVICE r7)
     val loadEnd = loadAvg()
     val retryRef = refPath.filter(_ => refTimes.nonEmpty)
       .map(p => "\"" + p + "\"").getOrElse("\"MISSING\"")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","load_avg_start":$loadStart,"load_avg_end":$loadEnd,"retried_samples":$retriedJson,"retry_ref":$retryRef}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$failedJson,"sf":"$sfDir","load_avg_start":$loadStart,"load_avg_end":$loadEnd,"retried_samples":$retriedJson,"retry_ref":$retryRef}"""
     // The full per-query map is ~12 KB — the driver's log tail keeps
     // only the last ~530 bytes of stdout, so even last round's ~1.2 KB
     // top-30 line was cut mid-JSON (BENCH_r07 "parsed": null, seven
@@ -109,8 +119,11 @@ object Bench {
     val top = results.toSeq.sortBy(-_._2).take(5)
       .map { case (k, v) => s"\"" + k + "\":" + r3(v) }
       .mkString("{", ",", "}")
+    // One line per failed query (name and exception class) ahead of the
+    // bounded summary line, which keeps only their count.
+    failed.foreach { case (n, c) => println(s"[bench] FAILED $n: $c") }
     println(
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$top,"n_queries":${results.size},"median":${r3(median)},"sf":"$sfDir","load_end":${r3(loadEnd)},"full_artifact":"target/bench_full.json"}""")
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$top,"n_queries":${results.size},"n_failed":${failed.size},"median":${r3(median)},"sf":"$sfDir","load_end":${r3(loadEnd)},"full_artifact":"target/bench_full.json"}""")
     spark.stop()
   }
 }

@@ -34,14 +34,14 @@ object SparkEntry {
       .withColumn("direction", when(col("l_returnflag") === "R", lit("out")).otherwise(lit("in")))
 
     // Pivot in/out (PROC:190-207) — single row per (orderkey, nation).
-    // Idiomatic single-pass groupBy().pivot(): ONE shuffle, vs the
+    // Single-pass conditional aggregation: ONE shuffle, vs the
     // reference's full-outer self-join which re-executes the whole
     // enrichment per direction branch (SURVEY §3.3). The self-join form
     // itself is gate-checked by q_pivot_full_join.
     val pivoted = Relational.pivotSinglePass(
       enriched.select(col("o_orderkey"), col("n_name"), col("o_orderdate"),
         col("direction"), Scalars.dec(col("l_quantity")).as("qty")),
-      Seq("o_orderkey", "n_name", "o_orderdate"), "direction", Seq("in", "out"), "qty")
+      Seq("o_orderkey", "n_name", "o_orderdate"), "direction", Seq("in", "out"), col("qty"), sum)
       .withColumnRenamed("in", "qty_in").withColumnRenamed("out", "qty_out")
 
     // Derived metrics + WIB timestamp columns (PROC:209-215).

@@ -67,20 +67,26 @@ object Relational {
     in.join(out, keys, "full_outer")
   }
 
-  /** C2 idiomatic single-pass alternative: groupBy + pivot avoids the
-    * self-join entirely — one shuffle instead of two plus a join. The
-    * reference re-executes its whole 4-table join per direction branch
+  /** C2 idiomatic single-pass alternative: one conditional aggregation,
+    * `agg(when(directionCol === d, value))` named `d` for each direction,
+    * in one `groupBy` — one shuffle, no self-join. The reference
+    * re-executes its whole 4-table join per direction branch
     * (`Processing Data.py:188-207`, see SURVEY §3.3); this form cannot.
+    * It gives what `groupBy(keys).pivot(directionCol, directions)
+    * .agg(agg(value))` gives (a direction with no row, or only null
+    * values, under a key is null), but `pivot` plans two aggregations,
+    * i.e. two shuffles.
     */
   def pivotSinglePass(
       df: DataFrame,
       keys: Seq[String],
       directionCol: String,
       directions: Seq[String],
-      valueCol: String): DataFrame =
-    df.groupBy(keys.map(col): _*)
-      .pivot(directionCol, directions)
-      .agg(sum(col(valueCol)))
+      value: Column,
+      agg: Column => Column): DataFrame = {
+    val perDirection = directions.map(d => agg(when(col(directionCol) === d, value)).as(d))
+    df.groupBy(keys.map(col): _*).agg(perDirection.head, perDirection.tail: _*)
+  }
 
   /** C5 — anti join: rows of `df` with no match in `other`. */
   def antiJoin(df: DataFrame, other: DataFrame, cond: Column): DataFrame =

@@ -13,11 +13,13 @@ import org.apache.spark.sql.functions._
   *   shift, date parts -> wide projection -> partitioned write
   *
   * Key plan differences vs the reference (SURVEY §3.3):
-  *  - the pivot is `groupBy().pivot()` — ONE pass over the enriched
+  *  - the pivot is one conditional aggregation
+  *    ([[Relational.pivotSinglePass]]) — ONE pass over the enriched
   *    rows. The reference's temp-view self-join re-executes the whole
   *    4-table join per direction branch;
-  *  - dims are broadcast, so the fact table's only shuffle is the
-  *    pivot's group-by — at 100 TB that is the minimum possible;
+  *  - dims are broadcast, so the fact rows shuffle once for the pivot's
+  *    group-by and once more for the write's compaction repartition
+  *    ([[PartitionedWriter.writePartitionedCounted]]);
   *  - `d.ds = '<day>'` partition pruning still reaches the fact scan.
   */
 object Enrich {
@@ -47,10 +49,8 @@ object Enrich {
   def pivotAndDerive(enriched: DataFrame, day: String): DataFrame = {
     val keys = Seq("host_name", "description", "waktu", "remote", "kanca", "kanwil",
       "latitude", "longitude", "interface", "display_key")
-    val pivoted = enriched
-      .groupBy(keys.map(col): _*)
-      .pivot("direction", Seq("in", "out"))
-      .agg(max(col("value").cast("double")))
+    val pivoted = Relational.pivotSinglePass(enriched, keys, "direction", Seq("in", "out"),
+        col("value").cast("double"), max)
       .withColumnRenamed("in", "throughput_in")
       .withColumnRenamed("out", "throughput_out")
     val derived = pivoted

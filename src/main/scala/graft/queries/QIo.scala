@@ -259,7 +259,7 @@ object QIo {
       val pivoted = Relational.pivotSinglePass(
         enriched.select(col("n_name"), col("ds"), col("direction"),
           Scalars.dec(col("l_quantity")).as("qty")),
-        Seq("n_name", "ds"), "direction", Seq("in", "out"), "qty")
+        Seq("n_name", "ds"), "direction", Seq("in", "out"), col("qty"), sum)
         .select(col("n_name"), col("ds"),
           col("in").cast("double").as("qty_in"),
           col("out").cast("double").as("qty_out"))

@@ -95,7 +95,7 @@ class OpsSpec extends SparkSpec {
     ).toDF("host", "direction", "v")
     val fj = Relational.pivotFullJoin(df, Seq("host"), "direction", "in", "out", "v", "v_in", "v_out")
       .orderBy("host").collect().map(r => (r.getString(0), Option(r.get(1)), Option(r.get(2))))
-    val sp = Relational.pivotSinglePass(df, Seq("host"), "direction", Seq("in", "out"), "v")
+    val sp = Relational.pivotSinglePass(df, Seq("host"), "direction", Seq("in", "out"), col("v"), sum)
       .orderBy("host").collect().map(r => (r.getString(0), Option(r.get(1)), Option(r.get(2))))
     assert(fj.toSeq == sp.toSeq)
     assert(fj.length == 3) // h2 and h3 survive with one side null

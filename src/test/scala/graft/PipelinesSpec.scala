@@ -144,6 +144,96 @@ class PipelinesSpec extends SparkSpec {
     assert(MySqlIngest.watermark(spark, out).contains("20240102"))
   }
 
+  // Four hours from an hour boundary, three readings per hour, in an
+  // hour-partitioned parquet table (the shape of a Zabbix `history`).
+  private val hourBase = 1704099600L
+  private lazy val hourDir = {
+    val dir = tmpDir("mysql_hourly")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
+    (0 until 12).map(k => (k.toLong, hourBase + 1200L * k, BigDecimal(k), k / 3))
+      .toDF("itemid", "clock", "value", "hour").write.partitionBy("hour").parquet(dir)
+    dir
+  }
+  private def inHour(df: org.apache.spark.sql.DataFrame, a: Long, b: Long) =
+    df.filter($"hour" === ((a - hourBase) / 3600).toInt && $"clock" >= a && $"clock" < b)
+      .select("itemid", "clock", "value")
+  private def fileScans(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+    }
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("MySqlIngest: one scan for a shared hour-partitioned relation; per-hour relations still union") {
+    val shared = spark.read.parquet(hourDir)
+    val sharedSource = (a: Long, b: Long) => inHour(shared, a, b)
+    // a new relation per hour, as a JDBC pushdown source makes
+    val perHourSource = (a: Long, b: Long) => inHour(spark.read.parquet(hourDir), a, b)
+    val end = hourBase + 3 * 3600L
+    val unionOfHours = (hourBase until end by 3600L)
+      .map(a => MySqlIngest.conform(sharedSource(a, a + 3600L))).reduce(_ unionByName _)
+    val fused = MySqlIngest.hourly(sharedSource, hourBase, end).get
+    val unioned = MySqlIngest.hourly(perHourSource, hourBase, end).get
+    assert(fileScans(unionOfHours).size == 3 && fileScans(unioned).size == 3)
+    // the OR of the hours still prunes the table's fourth hour
+    assert(fileScans(fused).map(_.partitionFilters.nonEmpty) == Seq(true))
+    val expected = sortedRows(unionOfHours)
+    assert(expected.size == 9 && sortedRows(fused) == expected && sortedRows(unioned) == expected)
+    assert(fused.schema == unionOfHours.schema)
+  }
+
+  test("MySqlIngest: a source that ignores its bounds lands each in-range row once") {
+    val fixture = (-2 until 12).map(k => (k.toLong, hourBase + 1200L * k, BigDecimal(k)))
+      .toDF("itemid", "clock", "value")
+    val out = tmpDir("mysql_unbounded")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    assert(MySqlIngest.run(spark, (_, _) => fixture, hourBase, hourBase + 3 * 3600L, out) == 9)
+    val ids = spark.read.parquet(out).select($"itemid").as[Long].collect().sorted.toSeq
+    assert(ids == (0L until 9L))
+  }
+
+  test("MySqlIngest: an empty range or an empty first run writes nothing and returns the table's count") {
+    val fixture = Seq((1L, hourBase, BigDecimal(1))).toDF("itemid", "clock", "value")
+    val source = (a: Long, b: Long) => fixture.filter($"clock" >= a && $"clock" < b)
+    val out = tmpDir("mysql_empty")
+    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))
+    assert(MySqlIngest.run(spark, source, hourBase, hourBase, out) == 0L) // no table
+    // first run whose windows hold no row
+    assert(MySqlIngest.run(spark, source, hourBase + 3600L, hourBase + 7200L, out) == 0L)
+    assert(MySqlIngest.run(spark, source, hourBase, hourBase + 3600L, out) == 1L)
+    assert(MySqlIngest.run(spark, source, hourBase + 7200L, hourBase + 3600L, out) == 1L)
+  }
+
+  test("Enrich: the pivot is one aggregation exchange and equals groupBy().pivot()") {
+    val keys = Seq("host_name", "description", "waktu", "remote", "kanca", "kanwil",
+      "latitude", "longitude", "interface", "display_key")
+    val enriched = Seq(
+      ("both", "in", Some(1)), ("both", "in", Some(7)), ("both", "out", Some(2)),
+      ("in_only", "in", Some(3)), ("out_only", "out", Some(4)),
+      ("null_in", "in", None), ("null_in", "out", Some(5)), ("all_null", "out", None)
+    ).toDF("host_name", "direction", "v").select(
+      $"host_name", lit("WAN").as("description"), lit("2024-01-01 16:20:00").as("waktu"),
+      lit("SiteA").as("remote"), lit("KancaX").as("kanca"), lit("KanwilY").as("kanwil"),
+      lit(-6.2).as("latitude"), lit(106.8).as("longitude"), lit("eth0").as("interface"),
+      $"host_name".as("display_key"), $"direction", $"v".cast("decimal(20,0)").as("value"))
+    val got = Enrich.pivotAndDerive(enriched, "20240101")
+    val exchanges = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(got.queryExecution.executedPlan) {
+        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+      }
+    assert(exchanges.size == 1, got.queryExecution.executedPlan.toString)
+    val pivoted = enriched.groupBy(keys.map(col): _*)
+      .pivot("direction", Seq("in", "out"))
+      .agg(max(col("value").cast("double")))
+      .select((keys.map(col) :+ $"in".as("throughput_in") :+ $"out".as("throughput_out")): _*)
+    val mine = got.select((keys :+ "throughput_in" :+ "throughput_out").map(col): _*)
+    assert(mine.schema.map(_.dataType) == pivoted.schema.map(_.dataType))
+    assert(sortedRows(mine) == sortedRows(pivoted) && sortedRows(mine).size == 5)
+    val byHost = got.collect().map(r => r.getAs[String]("host_name") ->
+      (Option(r.getAs[java.lang.Double]("throughput_in")), Option(r.getAs[java.lang.Double]("throughput_out")))).toMap
+    assert(byHost("both") == (Some(7.0), Some(2.0)) && byHost("null_in") == (None, Some(5.0)))
+  }
+
   test("Enrich: 4-table join + regex derive + single-pass pivot (PROC semantics)") {
     val remotes = Seq(("10.0.0.1", "tipe", "KancaX", "KanwilY", "SiteA", -6.2, 106.8))
       .toDF("remote_ip", "tipe", "kanca", "kanwil", "remote", "latitude", "longitude")
